@@ -58,12 +58,12 @@ object ScaleSmoke {
     * serial driver loop (threshold forced above the file count) and
     * the r21 executor-side sweep (threshold at its default 16) — and
     * report commit wall time per path, plus the two manifests' marker
-    * payloads compared field-for-field (rows/stats/cols must be
-    * byte-identical; SnapshotSpec asserts the same at 24 files, this
+    * payloads compared as decoded values (every entry's rows/stats/cols
+    * must be identical; SnapshotSpec asserts the same at 24 files, this
     * measures the latency claim at realistic backfill file counts).
     * Usage: runMain graft.ScaleSmoke stats [files] [sfDir]. */
   private def statsSmoke(spark: SparkSession, sfDir: String, files: Int): Unit = {
-    import graft.sources.Snapshots
+    import graft.sources.{MarkerCodec, Snapshots}
     val scratch = s"${sys.props("java.io.tmpdir")}/graft_scale_stats"
     val rootLoop = s"$scratch/loop"; val rootSweep = s"$scratch/sweep"
     Fs.deleteDir(spark, rootLoop); Fs.deleteDir(spark, rootSweep)
@@ -83,23 +83,22 @@ object ScaleSmoke {
     try {
       val secLoop = timedCommit(rootLoop, files + 1) // forced driver loop
       val secSweep = timedCommit(rootSweep, 16)      // executor sweep engages
-      // marker payload identity: same rows/stats/cols recorded per file
-      def markers(root: String): Seq[String] = {
-        val dir = new java.io.File(s"$root/_commits")
-        dir.listFiles().filter(_.getName.endsWith(".json")).sortBy(_.getName)
-          .map { f =>
-            val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-            // strip volatile fields (uuid dir names, timestamps): keep
-            // the harvested stats/rows/cols payloads only
-            txt.split(",").filter(p =>
-              p.contains("\"rows\"") || p.contains("\"stats\"") || p.contains("\"cols\""))
-              .mkString(",")
-          }.toSeq
+      // marker payload identity: the decoded rows/stats/cols of every
+      // entry (entry dirs are fresh uuids, so they are left out)
+      def markers(root: String) = {
+        val ms = Option(new java.io.File(s"$root/_commits").listFiles())
+          .getOrElse(Array.empty[java.io.File])
+          .filter(_.getName.toLongOption.isDefined).sortBy(_.getName.toLong)
+        if (ms.isEmpty)
+          throw new IllegalStateException(s"no commit markers under $root/_commits")
+        ms.toSeq.map(f => MarkerCodec.decode(java.nio.file.Files.readAllBytes(f.toPath))
+          .entries.map(e => (e.rows, e.stats, e.cols)))
       }
-      val same = markers(rootLoop) == markers(rootSweep)
+      val loop = markers(rootLoop)
+      val same = loop == markers(rootSweep)
       println(f"SCALESMOKE_STATS files=$files rows=$n " +
         f"driver_loop_sec=$secLoop%.2f executor_sweep_sec=$secSweep%.2f " +
-        f"markers_identical=$same")
+        f"markers=${loop.size} markers_identical=$same")
     } finally prev match {
       case Some(p) => spark.conf.set(confKey, p)
       case None => spark.conf.unset(confKey)

@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Fs
+import graft.sources.MarkerCodec.{Bound, Entry, Marker}
 
 /** Snapshot-isolated versioned tables — the transactional seat the
   * ACID dataflow family (`sink_merge_upsert`, `sink_acid_update_delete`,
@@ -71,11 +72,19 @@ import graft.Fs
   *     COMPOSE: appends keep a copy-on-write table replaceable,
   *     compaction preserves granularity, restore survives a
   *     concurrent expire (dead dirs get the orphan grace window).
-  *   - **Markers carry per-entry row counts** (r20): staged entries
-  *     are footer-counted once at commit, inherited entries copy
-  *     forward — `history` reports sizes and the streaming source
-  *     rate-limits by volume ([[versionCapByRows]]) with zero data
-  *     I/O.
+  *   - **One typed, versioned marker.** A marker is a
+  *     [[MarkerCodec.Marker]]: parent, folded ledger, own batch id, and
+  *     one [[MarkerCodec.Entry]] per manifest entry with its row count,
+  *     column min/max and column names. [[MarkerCodec]] is the only
+  *     code that reads or writes marker bytes. Staged entries are
+  *     footer-measured once at commit, inherited entries copy forward —
+  *     `history` reports sizes, the streaming source rate-limits by
+  *     volume ([[versionCapByRows]]) and [[readRange]] prunes entries,
+  *     all with zero data I/O. Readers accept exactly one
+  *     `formatVersion`: a complete marker of any other format fails at
+  *     once with an IllegalStateException naming the table, the version
+  *     and the format version found; only an empty or truncated marker
+  *     counts as in flight.
   *
   * At 100 TB nothing here touches data size: a commit is one
   * `listStatus` of `_commits` (O(#versions) names, bounded by
@@ -151,7 +160,7 @@ object Snapshots {
     * [[requireAtomicCommitScheme]] has already rejected schemes where
     * it would not be. */
   private def createExclusive(
-      s: SparkSession, path: String, content: String): Boolean = {
+      s: SparkSession, path: String, content: Array[Byte]): Boolean = {
     val p = new Path(path)
     val f = Fs.fs(s, path)
     val uri = f.getUri
@@ -159,7 +168,7 @@ object Snapshots {
       val local = java.nio.file.Paths.get(p.toUri.getPath)
       java.nio.file.Files.createDirectories(local.getParent)
       try {
-        java.nio.file.Files.write(local, content.getBytes("UTF-8"),
+        java.nio.file.Files.write(local, content,
           java.nio.file.StandardOpenOption.CREATE_NEW)
         true
       } catch { case _: java.nio.file.FileAlreadyExistsException => false }
@@ -171,7 +180,7 @@ object Snapshots {
       // the caller sees an error, not a phantom conflict
       try {
         val out = f.create(p, false)
-        try out.write(content.getBytes("UTF-8")) finally out.close()
+        try out.write(content) finally out.close()
         true
       } catch {
         case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
@@ -183,16 +192,9 @@ object Snapshots {
     }
   }
 
-  private def readSmall(s: SparkSession, path: String): String = {
-    val f = Fs.fs(s, path)
-    val in = f.open(new Path(path))
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](4096)
-      var n = in.read(buf)
-      while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      bytes.toString("UTF-8")
-    } finally in.close()
+  private def readSmall(s: SparkSession, path: String): Array[Byte] = {
+    val in = Fs.fs(s, path).open(new Path(path))
+    try in.readAllBytes() finally in.close()
   }
 
   /** Commit `df` as the snapshot FOLLOWING `expectedParent` (0 = the
@@ -203,11 +205,11 @@ object Snapshots {
     * [[SnapshotConflictException]] is thrown; the caller re-reads the
     * new latest, re-derives, and retries (see [[commitTransform]]). */
   def commit(s: SparkSession, root: String, df: DataFrame,
-             expectedParent: Long,
-             extraMeta: Map[String, String] = Map.empty): Long = {
-    validateCommit(s, root, expectedParent, extraMeta)
+             expectedParent: Long): Long = {
+    validateCommit(s, root, expectedParent)
     val uuid = stagePlain(s, root, df)
-    claim(s, root, expectedParent, Seq(uuid), Seq(uuid), extraMeta)
+    claim(s, root, expectedParent, parentMarker(s, root, expectedParent),
+      Seq(footerInfo(s, root, uuid)), Seq(uuid))
   }
 
   /** APPEND commit: the new version's manifest = the parent's data
@@ -222,11 +224,9 @@ object Snapshots {
     * against an empty table it is rejected (seed an intentionally
     * empty table with [[commit]]). */
   def appendCommit(s: SparkSession, root: String, df: DataFrame,
-                   expectedParent: Long,
-                   extraMeta: Map[String, String] = Map.empty): Long = {
-    validateCommit(s, root, expectedParent, extraMeta)
-    appendWith(s, root, df, expectedParent, extraMeta, batch = None,
-      partCol = None)
+                   expectedParent: Long): Long = {
+    validateCommit(s, root, expectedParent)
+    appendWith(s, root, df, expectedParent, batch = None, partCol = None)
   }
 
   /** APPEND to a PARTITION-GRANULAR table: the batch is staged one
@@ -238,19 +238,18 @@ object Snapshots {
     * (its whole-dir entry would silently downgrade the manifest, the
     * same trap plain compact had — r19 #2). */
   def appendPartitioned(s: SparkSession, root: String, df: DataFrame,
-                        partCol: String, expectedParent: Long,
-                        extraMeta: Map[String, String] = Map.empty): Long = {
-    validateCommit(s, root, expectedParent, extraMeta)
-    appendWith(s, root, df, expectedParent, extraMeta, batch = None,
+                        partCol: String, expectedParent: Long): Long = {
+    validateCommit(s, root, expectedParent)
+    appendWith(s, root, df, expectedParent, batch = None,
       partCol = Some(partCol))
   }
 
   private def appendWith(s: SparkSession, root: String, df: DataFrame,
-      expectedParent: Long, extraMeta: Map[String, String],
-      batch: Option[Long], partCol: Option[String]): Long = {
-    val inherit =
-      if (expectedParent == 0L) Seq.empty else entriesOf(s, root, expectedParent)
-    val granular = inherit.exists(_.contains(s"/$PartDir="))
+      expectedParent: Long, batch: Option[Long],
+      partCol: Option[String]): Long = {
+    val parent = parentMarker(s, root, expectedParent)
+    val inherit = parent.fold(Seq.empty[Entry])(_.entries)
+    val granular = inherit.exists(_.dir.contains(s"/$PartDir="))
     require(!granular || partCol.isDefined,
       s"$root is partition-granular — a plain whole-dir append would " +
         "downgrade its manifest and break copy-on-write; use " +
@@ -282,7 +281,7 @@ object Snapshots {
     def emptyStreamingAppend(uuid: String): Long = {
       Fs.deleteDir(s, s"${dataRoot(root)}/$uuid")
       if (inherit.nonEmpty)
-        claim(s, root, expectedParent, inherit, Seq.empty, extraMeta, batch)
+        claim(s, root, expectedParent, parent, inherit, Seq.empty, batch)
       else EmptyGenesisNoop
     }
     partCol match {
@@ -290,18 +289,16 @@ object Snapshots {
         val uuid = stagePlain(s, root, df)
         // emptiness is a ROW-count question, not a file-count one: an
         // empty df still stages one schema-carrying 0-row parquet file
-        // (footer read — handed into claim so the pass runs ONCE)
-        val (rows, stats, cols) = footerInfo(s, s"${dataRoot(root)}/$uuid")
-        if (rows == 0L && batch.isDefined) emptyStreamingAppend(uuid)
-        else if (rows == 0L && inherit.isEmpty) {
+        val staged = footerInfo(s, root, uuid)
+        if (staged.rows == 0L && batch.isDefined) emptyStreamingAppend(uuid)
+        else if (staged.rows == 0L && inherit.isEmpty) {
           Fs.deleteDir(s, s"${dataRoot(root)}/$uuid")
           throw new IllegalArgumentException(
             "append of an empty DataFrame into an empty table — an append " +
               "has nothing to add; seed an intentionally empty table with " +
               "commit()")
-        } else claim(s, root, expectedParent, inherit :+ uuid, Seq(uuid),
-          extraMeta, batch, knownRows = Map(uuid -> rows),
-          knownStats = Map(uuid -> stats), knownCols = Map(uuid -> cols))
+        } else claim(s, root, expectedParent, parent, inherit :+ staged,
+          Seq(uuid), batch)
       case Some(pc) =>
         require(inherit.isEmpty || granular,
           s"$root is a plain (whole-dir) table — appendPartitioned would mix " +
@@ -324,8 +321,9 @@ object Snapshots {
               "commits). An empty partitioned table is not representable — " +
               "seed with a non-empty commitPartitioned")
         } else
-          claim(s, root, expectedParent, inherit ++ subs.map(n => s"$uuid/$n"),
-            Seq(uuid), extraMeta, batch)
+          claim(s, root, expectedParent, parent,
+            inherit ++ subs.map(n => footerInfo(s, root, s"$uuid/$n")),
+            Seq(uuid), batch)
     }
   }
 
@@ -336,9 +334,8 @@ object Snapshots {
     * key is a duplicate), so reads need no partition inference and
     * the schema is identical to a plain commit's. */
   def commitPartitioned(s: SparkSession, root: String, df: DataFrame,
-                        partCol: String, expectedParent: Long,
-                        extraMeta: Map[String, String] = Map.empty): Long = {
-    validateCommit(s, root, expectedParent, extraMeta)
+                        partCol: String, expectedParent: Long): Long = {
+    validateCommit(s, root, expectedParent)
     val (uuid, subs) = stagePartitioned(s, root, df, partCol)
     if (subs.isEmpty) {
       // an empty df stages no __gp dirs; claiming an empty manifest
@@ -349,7 +346,8 @@ object Snapshots {
         "commitPartitioned got an empty DataFrame — an empty manifest " +
           "is not representable; use commit() for an empty snapshot")
     }
-    claim(s, root, expectedParent, subs.map(n => s"$uuid/$n"), Seq(uuid), extraMeta)
+    claim(s, root, expectedParent, parentMarker(s, root, expectedParent),
+      subs.map(n => footerInfo(s, root, s"$uuid/$n")), Seq(uuid))
   }
 
   /** COPY-ON-WRITE commit (VERDICT r18 #2): replace ONLY the
@@ -370,13 +368,12 @@ object Snapshots {
     * `alsoDrop` is rejected — "replace nothing" is ambiguous. */
   def commitReplace(s: SparkSession, root: String, df: DataFrame,
                     partCol: String, expectedParent: Long,
-                    extraMeta: Map[String, String] = Map.empty,
                     alsoDrop: Seq[String] = Nil): Long = {
-    validateCommit(s, root, expectedParent, extraMeta)
+    validateCommit(s, root, expectedParent)
     require(expectedParent >= 1L,
       "commitReplace needs an existing snapshot to inherit from")
-    val parentEntries = entriesOf(s, root, expectedParent)
-    require(parentEntries.forall(_.contains(s"/$PartDir=")),
+    val parent = metaOf(s, root, expectedParent)
+    require(parent.entries.forall(_.dir.contains(s"/$PartDir=")),
       s"commitReplace requires a partition-granular manifest under $root " +
         "(seed the table with commitPartitioned)")
     val (uuid, subs) = stagePartitioned(s, root, df, partCol)
@@ -401,19 +398,19 @@ object Snapshots {
         s"partitions ${contradicted.mkString(",")} appear both in df and in " +
           "alsoDrop — replace-and-drop of the same partition is contradictory")
     }
-    val kept = parentEntries.filterNot { e =>
-      val n = e.substring(e.indexOf('/') + 1)
+    val kept = parent.entries.filterNot { e =>
+      val n = e.dir.substring(e.dir.indexOf('/') + 1)
       replaced.contains(n) ||
         dropValues.contains(unescapePathValue(n.stripPrefix(s"$PartDir=")))
     }
-    val entries = kept ++ subs.map(n => s"$uuid/$n")
-    if (entries.isEmpty) {
+    if (kept.isEmpty && subs.isEmpty) {
       Fs.deleteDir(s, s"${dataRoot(root)}/$uuid")
       throw new IllegalArgumentException(
         "commitReplace would empty the manifest — an empty table state " +
           "is not representable; use commit() for a full rewrite")
     }
-    claim(s, root, expectedParent, entries, Seq(uuid), extraMeta)
+    claim(s, root, expectedParent, Some(parent),
+      kept ++ subs.map(n => footerInfo(s, root, s"$uuid/$n")), Seq(uuid))
   }
 
   /** METADATA-ONLY partition drop (the retention sweep, transactional):
@@ -427,21 +424,20 @@ object Snapshots {
     * no-op). At 100 TB this is one marker write — the snapshot-table
     * form of `sink_drop_partition`'s zero-data-I/O contract. */
   def commitDropPartitions(s: SparkSession, root: String,
-      values: Seq[String], expectedParent: Long,
-      extraMeta: Map[String, String] = Map.empty): Long = {
-    validateCommit(s, root, expectedParent, extraMeta)
+      values: Seq[String], expectedParent: Long): Long = {
+    validateCommit(s, root, expectedParent)
     require(expectedParent >= 1L,
       "commitDropPartitions needs an existing snapshot")
-    val parentEntries = entriesOf(s, root, expectedParent)
-    require(parentEntries.forall(_.contains(s"/$PartDir=")),
+    val parent = metaOf(s, root, expectedParent)
+    require(parent.entries.forall(_.dir.contains(s"/$PartDir=")),
       s"commitDropPartitions requires a partition-granular manifest under $root")
     // match on the UNESCAPED partition value: the stager escapes
     // special chars into the dir name (Hive %XX path escaping), so a
     // raw-value comparison would make such partitions undroppable
     // (review finding)
     val wanted = values.toSet
-    val (dropped, kept) = parentEntries.partition { e =>
-      val n = e.substring(e.indexOf('/') + 1)
+    val (dropped, kept) = parent.entries.partition { e =>
+      val n = e.dir.substring(e.dir.indexOf('/') + 1)
       n.startsWith(s"$PartDir=") &&
         wanted.contains(unescapePathValue(n.stripPrefix(s"$PartDir=")))
     }
@@ -451,7 +447,7 @@ object Snapshots {
     // can resolve; an empty table state is out of the format's domain
     require(kept.nonEmpty,
       s"dropping ${values.mkString(",")} would empty $root — not expressible")
-    claim(s, root, expectedParent, kept, Seq.empty, extraMeta)
+    claim(s, root, expectedParent, Some(parent), kept, Seq.empty)
   }
 
   // ---- commit internals ----
@@ -476,7 +472,7 @@ object Snapshots {
   }
 
   private def validateCommit(s: SparkSession, root: String,
-      expectedParent: Long, extraMeta: Map[String, String]): Unit = {
+      expectedParent: Long): Unit = {
     requireAtomicCommitScheme(s, root)
     // a STALE parent is caught atomically by the marker claim below;
     // a parent AHEAD of latest would silently claim past a gap, so
@@ -485,20 +481,6 @@ object Snapshots {
     if (expectedParent > cur)
       throw new IllegalArgumentException(
         s"expectedParent $expectedParent is ahead of latest $cur under $root")
-    // the marker is parsed by string-split, so meta entries must not
-    // smuggle quotes/braces, and the manifest's own fields are
-    // reserved (a crafted earlier "data" occurrence would win the
-    // first-match parse and redirect reads)
-    // "batch" is the exactly-once ledger's own field (txnAppend): a
-    // caller-supplied value would be folded into lb and could disable
-    // every future replay detection (review finding)
-    extraMeta.foreach { case (k, x) =>
-      require(k.matches("[A-Za-z0-9_-]+") &&
-        !Set("data", "rows", "stats", "cols", "parent", "lb", "batch")(k),
-        s"invalid or reserved extraMeta key: $k")
-      require(x.matches("[A-Za-z0-9_.: -]*"),
-        s"extraMeta value for $k must stay in the JSON-safe charset")
-    }
   }
 
   /** Stage `df` as one whole-dir entry; returns the dir's uuid name. */
@@ -523,17 +505,7 @@ object Snapshots {
         col(partCol).cast(org.apache.spark.sql.types.StringType))
       .repartition(col(PartDir))
       .write.mode("errorifexists").partitionBy(PartDir).parquet(dataDir)
-    val subs = Fs.partDirs(s, dataDir, PartDir)
-    // manifest entries are space-joined inside the marker, so a value
-    // whose ESCAPED dir name still carries a space/quote cannot be
-    // addressed; Spark/Hive path escaping covers control chars but a
-    // plain space survives — reject it rather than corrupt the marker
-    if (!subs.forall(n => !n.contains(" ") && !n.contains("\""))) {
-      Fs.deleteDir(s, dataDir)
-      throw new IllegalArgumentException(
-        s"partition values of $partCol produce manifest-unsafe dir names")
-    }
-    (uuid, subs)
+    (uuid, Fs.partDirs(s, dataDir, PartDir))
   }
 
   // ---- per-entry statistics (row counts + column min/max) ----
@@ -546,18 +518,6 @@ object Snapshots {
     * truncated binary stats stay valid bounds, but a short marker is
     * the point of manifest-level skipping). */
   private val StatsStrCap = 64
-
-  /** %XX-escape the stat-token delimiters; [[unescapePathValue]] is
-    * the decoder (same escaping the partition dirs use). */
-  private def escapeStatValue(v: String): String = {
-    val sb = new StringBuilder(v.length)
-    v.foreach { c =>
-      if (c == '%' || c == ',' || c == ':' || c == '=' || c == ' ' || c == '"')
-        sb.append(f"%%${c.toInt}%02X")
-      else sb.append(c)
-    }
-    sb.toString
-  }
 
   /** Only strings whose byte order equals their Java string order can
     * back a recorded range (parquet binary stats compare unsigned
@@ -622,20 +582,6 @@ object Snapshots {
     }
   }
 
-  /** ONE driver pass over the parquet FOOTERS under `dir`: the total
-    * row count plus a compact min/max token for up to [[StatsColCap]]
-    * top-level columns — O(#files) metadata reads, zero data I/O.
-    * What a staged entry records into its commit marker. Token shape:
-    * `col=kind:min:max` triples comma-joined (`-` = none); kinds are
-    * `l` (integral), `d` (floating), `s` (ASCII string). A column with
-    * any unusable chunk stats records nothing (absent = unknown =
-    * never pruned), so recorded ranges are always true bounds.
-    *
-    * The third element is the entry's TOP-LEVEL COLUMN NAME list
-    * (comma-joined, escaped, union over the entry's files) — what
-    * [[readRange]] uses to decide WITHOUT I/O whether pruning crossed
-    * a schema-evolution boundary (review finding: the per-read
-    * sampled-schema probe belongs in the marker). */
   /** One column chunk's stat outcome as a SERIALIZABLE event: tag 'r'
     * = usable range (kind/min/max as strings — Long/Double toString
     * round-trips exactly), 'm' = unusable stats (poisons the column).
@@ -667,7 +613,7 @@ object Snapshots {
     * ones. Field names come from the FOOTER SCHEMA, not the row-group
     * chunks, so a 0-row schema-carrying entry (the empty-append
     * schema-evolution vehicle) records its declared columns instead of
-    * the misleading '-' = provably-column-free (ADVICE r20 #1). */
+    * none = provably-column-free (ADVICE r20 #1). */
   private def fileFooterInfo(conf: Configuration, path: String)
       : (Long, Seq[String], Seq[ChunkStatEvent]) = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile
@@ -706,7 +652,18 @@ object Snapshots {
     s.conf.getOption("spark.graft.statsHarvestDistributeMinFiles")
       .map(_.toInt).getOrElse(16)
 
-  private def footerInfo(s: SparkSession, dir: String): (Long, String, String) = {
+  /** ONE driver pass over the parquet FOOTERS of staged entry `entry`:
+    * the total row count plus min/max for up to [[StatsColCap]]
+    * top-level columns — O(#files) metadata reads, zero data I/O.
+    * What a staged entry records into its commit marker. A column with
+    * any unusable chunk stats records nothing (absent = unknown = never
+    * pruned), so recorded ranges are always true bounds.
+    *
+    * The entry's TOP-LEVEL COLUMN NAME list (union over its files) is
+    * what [[readRange]] uses to decide WITHOUT I/O whether pruning
+    * crossed a schema-evolution boundary. */
+  private def footerInfo(s: SparkSession, root: String, entry: String): Entry = {
+    val dir = s"${dataRoot(root)}/$entry"
     // name-sorted so WHICH columns land under the cap is a pure
     // function of the staged data, not of listing order — markers
     // stay reproducible
@@ -765,16 +722,11 @@ object Snapshots {
         }
       }
     }
-    val tok =
-      if (acc.isEmpty) "-"
-      else acc.map { case (n, sr) =>
-        s"${escapeStatValue(n)}=${sr.kind}:${escapeStatValue(sr.mn.toString)}:" +
-          escapeStatValue(sr.mx.toString)
-      }.mkString(",")
-    val cols =
-      if (colNames.isEmpty) "-"
-      else colNames.map(escapeStatValue).mkString(",")
-    (rows, tok, cols)
+    Entry(entry, rows,
+      acc.map { case (n, sr) =>
+        n -> Bound(sr.kind.toString, sr.mn.toString, sr.mx.toString)
+      }.toMap,
+      colNames.toSeq)
   }
 
   private def statLt(kind: Char, a: Any, b: Any): Boolean = kind match {
@@ -783,148 +735,32 @@ object Snapshots {
     case _ => a.asInstanceOf[String].compareTo(b.asInstanceOf[String]) < 0
   }
 
-  /** entry → token of one of the marker's ALIGNED fields (the
-    * space-joined arrays written in step with `data`) — the one
-    * zip-and-validate implementation `rows`/`stats`/`cols` share
-    * (review finding: three near-identical parsers drift apart). */
-  private def alignedField(meta: String, key: String): Map[String, String] =
-    (metaField(meta, "data"), metaField(meta, key)) match {
-      case (Some(d), Some(t)) if ownField(meta, key) =>
-        val es = d.split(" "); val ts = t.split(" ")
-        if (ts.length == es.length) es.zip(ts).toMap else Map.empty
-      case _ => Map.empty
-    }
-
-  /** entry → stats token out of an already-read marker (empty for
-    * markers written before the `stats` field existed). */
-  private def statsOfMeta(meta: String): Map[String, String] =
-    alignedField(meta, "stats")
-
-  /** entry → top-level column-name token out of an already-read
-    * marker (empty for markers written before the `cols` field).
-    * `?` = inherited from a pre-cols parent (schema UNKNOWN — never
-    * to be confused with `-`, a file-less entry with no columns,
-    * review finding). */
-  private def colsOfMeta(meta: String): Map[String, String] =
-    alignedField(meta, "cols")
-
-  /** Decode one entry's stats token → column → (kind, min, max). */
-  private def parseStatsToken(tok: String): Map[String, (Char, String, String)] =
-    if (tok == "-") Map.empty
-    else tok.split(",").toSeq.flatMap { part =>
-      part.split("=") match {
-        case Array(n, rest) => rest.split(":", -1) match {
-          case Array(k, mn, mx) if k.length == 1 =>
-            Some(unescapePathValue(n) ->
-              (k.charAt(0), unescapePathValue(mn), unescapePathValue(mx)))
-          case _ => None
-        }
-        case _ => None
-      }
-    }.toMap
-
-  /** True when `key` occurs as one of the marker's OWN leading fields
-    * (the format writes data/rows/stats before parent) rather than as
-    * caller extraMeta: "rows"/"stats" were reservable extraMeta keys
-    * before r20, and a legacy marker carrying one must not have its
-    * caller metadata promoted to authoritative per-entry counts
-    * (review finding) — extras are always written AFTER parent/lb. */
-  private def ownField(meta: String, key: String): Boolean = {
-    val at = meta.indexOf(s""""$key":"""")
-    at >= 0 && at < meta.indexOf(""""parent":""")
-  }
-
-  /** entry → row count out of an already-read marker (empty for
-    * markers written before the `rows` field existed). */
-  private def rowsOfMeta(meta: String): Map[String, Long] = {
-    val toks = alignedField(meta, "rows")
-    if (toks.values.forall(_.toLongOption.isDefined))
-      toks.map { case (e, n) => e -> n.toLong }
-    else Map.empty
-  }
-
-  /** Build the marker (manifest entries + per-entry row counts +
-    * parent + folded ledger + caller meta) and claim
-    * `_commits/<parent+1>` atomically. On conflict deletes the staged
-    * dirs and throws.
+  /** Claim `_commits/<parent+1>` atomically with a marker naming
+    * `entries` and folding the exactly-once ledger forward from
+    * `parent` (the marker of `expectedParent`, None at genesis). On
+    * conflict deletes the staged dirs and throws.
     *
-    * PER-ENTRY ROW COUNTS (VERDICT r19 #6): each manifest entry's row
-    * count rides in the marker (`rows`, space-joined, aligned with
-    * `data`): freshly staged entries are counted ONCE from their
-    * parquet footers at commit time (O(staged files) driver metadata
-    * reads — never standing data), inherited entries copy their count
-    * forward from the parent's marker (`knownRows` lets metadata-only
-    * commits like restore carry the source version's counts). A
-    * pre-r20 parent contributes no counts — its inherited entries
-    * record -1 (unknown) rather than a lie.
+    * Each [[Entry]] carries its row count, column ranges and column
+    * names (VERDICT r19 #6; [public: Delta per-file stats / Iceberg
+    * manifest column bounds]): freshly staged entries are measured ONCE
+    * from their parquet footers ([[footerInfo]], O(staged files) driver
+    * metadata reads — never standing data), inherited entries are the
+    * parent's (or, for restore, the source version's) values copied
+    * forward — so [[readRange]] can prune a read to the intersecting
+    * entries from ONE marker read, before any file listing.
     *
-    * PER-ENTRY COLUMN MIN/MAX (the stats half of the same verdict
-    * item; [public: Delta per-file stats / Iceberg manifest column
-    * bounds]): the SAME footer pass records each staged entry's
-    * min/max for up to [[StatsColCap]] columns into the marker's
-    * `stats` field (aligned with `data`, `-` = none), inherited
-    * entries copy theirs forward — so [[readRange]] can prune a read
-    * to the intersecting entries from ONE marker read, before any
-    * file listing. */
+    * The ledger: lb(v) = max(lb(parent), this commit's own batch id) —
+    * the newest marker ALWAYS carries the full ledger, so expire can
+    * never lose it (r18 advice). The batch id is an INTERNAL parameter
+    * ([[txnAppend]]), never caller input. */
   private def claim(s: SparkSession, root: String, expectedParent: Long,
-      entries: Seq[String], stagedUuids: Seq[String],
-      extraMeta: Map[String, String], batch: Option[Long] = None,
-      knownRows: Map[String, Long] = Map.empty,
-      knownStats: Map[String, String] = Map.empty,
-      knownCols: Map[String, String] = Map.empty): Long = {
+      parent: Option[Marker], entries: Seq[Entry], stagedUuids: Seq[String],
+      batch: Option[Long] = None): Long = {
     val v = expectedParent + 1
-    // ONE parent-marker read feeds both the ledger fold and the
-    // row-count carry-forward (review: don't read the same small
-    // remote file twice per commit)
-    val parentMeta =
-      if (expectedParent > 0L) Some(metaOf(s, root, expectedParent)) else None
-    // fold the exactly-once ledger forward: lb(v) = max(lb(parent),
-    // this commit's own batch id) — the newest marker ALWAYS carries
-    // the full ledger, so expire can never lose it (r18 advice) and
-    // txnAppend never walks (the legacy walk below only runs for
-    // markers written before the lb field existed). The batch id is
-    // an INTERNAL parameter (txnAppend), never caller meta.
-    val parentLb = parentMeta
-      .map(m => lastBatchOfMeta(s, root, expectedParent, m)).getOrElse(-1L)
-    val lb = math.max(parentLb, batch.getOrElse(-1L))
-    val dirs = entries.mkString(" ")
-    val parentRows = parentMeta.map(rowsOfMeta).getOrElse(Map.empty[String, Long])
-    val parentStats =
-      parentMeta.map(statsOfMeta).getOrElse(Map.empty[String, String])
-    val parentCols =
-      parentMeta.map(colsOfMeta).getOrElse(Map.empty[String, String])
-    val staged = stagedUuids.toSet
-    val infos = entries.map { e =>
-      // caller-supplied info wins even for staged entries — lets a
-      // path that already footer-read a staged dir (the genesis
-      // emptiness check) hand its result in instead of re-reading
-      if (knownRows.contains(e) && knownStats.contains(e) &&
-          knownCols.contains(e))
-        (knownRows(e), knownStats(e), knownCols(e))
-      else if (staged.contains(e.split("/")(0)))
-        footerInfo(s, s"${dataRoot(root)}/$e")
-      else (knownRows.getOrElse(e, parentRows.getOrElse(e, -1L)),
-        knownStats.getOrElse(e, parentStats.getOrElse(e, "-")),
-        // "?" = UNKNOWN (pre-cols parent), distinct from "-" (a
-        // file-less entry with no columns): readRange must treat an
-        // unknown-schema entry as a forced probe, never as
-        // provably-column-free (review finding)
-        knownCols.getOrElse(e, parentCols.getOrElse(e, "?")))
-    }
-    val counts = infos.map(_._1)
-    val statsToks = infos.map(_._2)
-    val colsToks = infos.map(_._3)
-    val batchField = batch.map(b => s""","batch":"$b"""").getOrElse("")
-    val extras = extraMeta.map { case (k, x) => s""","$k":"$x"""" }.mkString
-    // every field is written QUOTED so [[metaField]] is the single
-    // parser of the format; markers from before r20 carry a bare
-    // numeric parent — [[parentOf]] keeps the legacy-read fallback
-    val meta =
-      s"""{"data":"$dirs","rows":"${counts.mkString(" ")}",""" +
-        s""""stats":"${statsToks.mkString(" ")}",""" +
-        s""""cols":"${colsToks.mkString(" ")}",""" +
-        s""""parent":"$expectedParent","lb":"$lb"$batchField$extras}"""
-    if (!createExclusive(s, s"${commitsDir(root)}/$v", meta)) {
+    val lb = math.max(parent.fold(-1L)(_.lb), batch.getOrElse(-1L))
+    val marker = Marker(MarkerCodec.FormatVersion, expectedParent, lb,
+      batch.getOrElse(-1L), entries)
+    if (!createExclusive(s, s"${commitsDir(root)}/$v", MarkerCodec.encode(marker))) {
       stagedUuids.foreach(u => Fs.deleteDir(s, s"${dataRoot(root)}/$u"))
       throw new SnapshotConflictException(
         s"version $v already committed under $root " +
@@ -933,13 +769,19 @@ object Snapshots {
     v
   }
 
-  /** Marker content of version `v`. Tolerates an IN-FLIGHT marker
+  private def parentMarker(s: SparkSession, root: String,
+                           expectedParent: Long): Option[Marker] =
+    if (expectedParent > 0L) Some(metaOf(s, root, expectedParent)) else None
+
+  /** Decoded marker of version `v`. Tolerates an IN-FLIGHT marker
     * (claimed, content not yet visible — HDFS exposes a length-0 file
-    * until close): retries briefly instead of crashing the reader
-    * with a parse error (r18 advice), then names the marker in an
-    * IllegalStateException if it never completes (a writer that died
-    * between claim and write — surgically removable). */
-  private def metaOf(s: SparkSession, root: String, v: Long): String = {
+    * until close; a partial flush exposes a truncated one): retries
+    * briefly instead of crashing the reader (r18 advice), then names
+    * the marker in an IllegalStateException if it never completes (a
+    * writer that died between claim and write — surgically removable).
+    * A COMPLETE marker of another format fails at once, naming the
+    * table, the version and the format version it found. */
+  private def metaOf(s: SparkSession, root: String, v: Long): Marker = {
     val marker = s"${commitsDir(root)}/$v"
     val f = Fs.fs(s, root)
     var attempt = 0
@@ -949,15 +791,17 @@ object Snapshots {
         throw new NoSuchElementException(
           s"snapshot version $v does not exist under $root " +
             s"(committed: ${versions(s, root).mkString(",")})")
-      val meta =
-        try Some(readSmall(s, marker))
-        catch { case _: java.io.FileNotFoundException => None } // expired mid-read
-      // completeness = the closing brace is visible, not merely "data
-      // parses": a partially flushed marker could expose a TRUNCATED
-      // entry list that silently resolves to a subset of the manifest
-      // (review finding) — markers are single-line JSON, written whole
-      meta.filter(m => m.trim.endsWith("}") &&
-          metaField(m, "data").isDefined) match {
+      val decoded =
+        try Some(MarkerCodec.decode(readSmall(s, marker)))
+        catch {
+          case _: java.io.FileNotFoundException => None // expired mid-read
+          case _: com.fasterxml.jackson.core.io.JsonEOFException => None
+          case e: IllegalArgumentException =>
+            throw new IllegalStateException(
+              s"snapshot version $v of $root: commit marker $marker is not " +
+                s"a readable marker: ${e.getMessage}", e)
+        }
+      decoded match {
         case Some(m) => return m
         case None => Thread.sleep(40) // in-flight: claimed, content pending
       }
@@ -967,27 +811,9 @@ object Snapshots {
         "— a writer likely died between claim and content write")
   }
 
-  /** One string field out of the marker's (self-written, flat) JSON
-    * — the ONLY parser of the marker format. */
-  private def metaField(meta: String, key: String): Option[String] =
-    meta.split(s""""$key":"""").drop(1).headOption.map(_.split("\"")(0))
-
-  /** The parent version a marker declares. Markers written before r20
-    * carried `parent` as the one unquoted field — fall back to the
-    * bare-number read so old tables keep describing their history. */
-  private def parentOf(meta: String): Long =
-    metaField(meta, "parent").map(_.toLong).getOrElse(
-      meta.split(""""parent":""").drop(1).headOption
-        .map(_.takeWhile(c => c.isDigit || c == '-')).map(_.toLong)
-        .getOrElse(-1L))
-
-  /** Manifest entries out of an already-read marker. */
-  private def entriesOfMeta(meta: String): Seq[String] =
-    metaField(meta, "data").get.split(" ").toSeq
-
   /** Manifest entries of `v`, relative to `data/`. */
   private def entriesOf(s: SparkSession, root: String, v: Long): Seq[String] =
-    entriesOfMeta(metaOf(s, root, v))
+    metaOf(s, root, v).entries.map(_.dir)
 
   private def dataDirsOf(s: SparkSession, root: String, v: Long): Seq[String] =
     entriesOf(s, root, v).map(u => s"${dataRoot(root)}/$u")
@@ -998,58 +824,10 @@ object Snapshots {
   def manifestDirs(s: SparkSession, root: String, v: Long): Seq[String] =
     dataDirsOf(s, root, v)
 
-  /** The value a commit recorded under `key` in its marker, if any —
-    * e.g. the streaming batch id a [[txnAppend]] commit carries. */
-  def commitMeta(s: SparkSession, root: String, v: Long,
-                 key: String): Option[String] =
-    metaField(metaOf(s, root, v), key)
-
-  /** The marker's OWN `lb`/`batch` value: these trailing ledger
-    * fields are written in one contiguous run after `parent`
-    * (`"parent":..,"lb":..[,"batch":..]`, or `"parent":..,"batch":..`
-    * in pre-lb markers), so only an occurrence inside that run is the
-    * format's own — caller extraMeta keyed "lb"/"batch" (possible
-    * before the keys were reserved) sits among the LATER extras and
-    * must never be promoted into the exactly-once ledger, where a
-    * large value would drop real micro-batches as replays and a
-    * non-numeric one would crash every commit (review finding). */
-  private val OwnLedgerRun = java.util.regex.Pattern.compile(
-    """"parent":"?-?\d+"?(?:,"lb":"(-?\d+)")?(?:,"batch":"(-?\d+)")?""")
-
-  private def ownLedger(meta: String, key: String): Option[Long] = {
-    // residual ambiguity, accepted: a PRE-RESERVATION marker whose
-    // caller extraMeta serialized "lb"/"batch" as the FIRST extra is
-    // byte-identical to an own-field run and is still promoted —
-    // physically indistinguishable in the bytes; the key reservation
-    // (r19/r20) closes the hole for every marker written since
-    val m = OwnLedgerRun.matcher(meta)
-    if (!m.find()) None
-    else key match {
-      case "lb" => Option(m.group(1)).map(_.toLong)
-      case _ => Option(m.group(2)).map(_.toLong)
-    }
-  }
-
-  /** `lb` out of version `v`'s ALREADY-READ marker, with the
-    * pre-ledger-era fallback walk — the one implementation the
-    * commit-time fold ([[claim]]) and replay detection
-    * ([[lastBatchUpTo]]) share, so the two can never disagree on the
-    * same table (review finding). */
-  private def lastBatchOfMeta(s: SparkSession, root: String, v: Long,
-                              meta: String): Long =
-    ownLedger(meta, "lb").getOrElse(
-      versions(s, root).filter(_ <= v).reverseIterator
-        .map(x => ownLedger(metaOf(s, root, x), "batch"))
-        .collectFirst { case Some(b) => b }
-        .getOrElse(-1L))
-
-  /** Max streaming batch id at or before version `v` — ONE marker
-    * read on any table written by this code (every marker folds `lb`
-    * forward); the fallback walk only ever runs for markers written
-    * before the ledger field existed. */
+  /** Max streaming batch id at or before version `v` — ONE marker read
+    * (every marker folds `lb` forward). */
   private def lastBatchUpTo(s: SparkSession, root: String, v: Long): Long =
-    if (v <= 0L) -1L
-    else lastBatchOfMeta(s, root, v, metaOf(s, root, v))
+    if (v <= 0L) -1L else metaOf(s, root, v).lb
 
   /** Read snapshot `v` (time travel). The manifest is resolved NOW
     * and its entries are immutable — the returned DataFrame yields
@@ -1081,9 +859,8 @@ object Snapshots {
     * the matching entries, not the table's worth of file metadata.
     *
     * Pruning is an optimization, never a correctness filter: entries
-    * with no recorded range for `column` (pre-stats markers, beyond
-    * the [[StatsColCap]] column cap, non-ASCII strings, unsupported
-    * types) are always read, and the real predicate is applied on top
+    * with no recorded range for `column` (beyond the [[StatsColCap]]
+    * column cap, non-ASCII strings, unsupported types) are always read, and the real predicate is applied on top
     * of the pruned scan (parquet row-group stats then skip within
     * kept entries). Bounds are inclusive; pass values of the column's
     * own family — integral/floating for `l`/`d` columns, String for
@@ -1097,9 +874,8 @@ object Snapshots {
     * resolution error). Whether pruning crossed an evolution boundary
     * is decided from the marker's per-entry column-name lists — zero
     * I/O on the common never-evolved table; only an actual boundary
-    * (or a legacy marker without the `cols` field) pays a one-sampled-
-    * file-per-entry union-schema probe (O(manifest), entries are
-    * single-write uniform — never a table listing). */
+    * pays a one-sampled-file-per-entry union-schema probe (O(manifest),
+    * entries are single-write uniform — never a table listing). */
   def readRange(s: SparkSession, root: String, column: String,
                 lo: Any, hi: Any, asOf: Long = -1L): DataFrame = {
     import org.apache.spark.sql.functions.lit
@@ -1110,41 +886,29 @@ object Snapshots {
       s"asOf must be a committed version (>= 1) or -1 for latest, got $asOf")
     val v = if (asOf >= 1L) asOf else latest(s, root).getOrElse(
       throw new NoSuchElementException(s"no committed snapshot under $root"))
-    val meta = metaOf(s, root, v)
-    val entries = entriesOfMeta(meta)
-    val stats = statsOfMeta(meta)
-    val kept = entries.filter { e =>
-      stats.get(e).map(parseStatsToken).flatMap(_.get(column)) match {
-        case Some((kind, mn, mx)) => rangeOverlaps(kind, mn, mx, lo, hi)
-        case None => true // no recorded range — must read
-      }
-    }
+    val entries = metaOf(s, root, v).entries
+    // no recorded range for the column — must read
+    val kept = entries.filter(e =>
+      e.stats.get(column).forall(b => rangeOverlaps(b, lo, hi)))
     // all-pruned still plans over the full manifest: the predicate
     // yields the schema-stable empty result and row-group stats skip
     // every block — no special-cased empty relation
     val keptAll = kept.isEmpty || kept.size == entries.size
     val base = readDirs(s,
-      (if (keptAll) entries else kept).map(u => s"${dataRoot(root)}/$u"))
+      (if (keptAll) entries else kept).map(e => s"${dataRoot(root)}/${e.dir}"))
     val aligned =
       if (keptAll) base
       else {
-        val cols = colsOfMeta(meta)
         // zero-I/O boundary test: pruning provably cannot change the
         // output schema ONLY when every entry records the IDENTICAL
         // ordered column list (order matters — mergeSchema's union
         // order depends on which entries survive, and positional
-        // consumers must not see reordered columns; review finding).
-        // A legacy marker (no cols field) or an entry inherited from
-        // a pre-cols parent ("?") answers conservatively yes.
-        val boundary =
-          cols.size != entries.size ||
-            cols.values.exists(_ == "?") ||
-            entries.map(cols).distinct.size > 1
-        if (!boundary) base
+        // consumers must not see reordered columns; review finding)
+        if (entries.map(_.cols).distinct.size <= 1) base
         else {
-          // evolution boundary (or legacy marker): one sampled file
-          // per MANIFEST entry re-derives the full union schema
-          val samples = entries.flatMap { u =>
+          // evolution boundary: one sampled file per MANIFEST entry
+          // re-derives the full union schema
+          val samples = entries.map(_.dir).flatMap { u =>
             Fs.dataFiles(s, s"${dataRoot(root)}/$u").sortBy(_._1).headOption
               .map { case (name, _) => s"${dataRoot(root)}/$u/$name" }
           }
@@ -1174,8 +938,7 @@ object Snapshots {
     * a predicate-value family that does not match the recorded kind
     * answer true (prune nothing) — mirroring the read-everything
     * default for missing stats. */
-  private def rangeOverlaps(kind: Char, mn: String, mx: String,
-                            lo: Any, hi: Any): Boolean = {
+  private def rangeOverlaps(b: Bound, lo: Any, hi: Any): Boolean = {
     // NaN and ±Infinity predicates disable pruning rather than crash
     // BigDecimal's double constructor (review finding) — the real
     // filter handles them fine
@@ -1200,23 +963,23 @@ object Snapshots {
       case _: Byte | _: Short | _: Int | _: Long => num(a)
       case _ => None
     }
-    kind match {
-      case 'l' => (intNum(lo), intNum(hi)) match {
-        case (Some(l), Some(h)) => BigDecimal(mx) >= l && BigDecimal(mn) <= h
+    b.kind match {
+      case "l" => (intNum(lo), intNum(hi)) match {
+        case (Some(l), Some(h)) => BigDecimal(b.max) >= l && BigDecimal(b.min) <= h
         case _ => true
       }
-      case 'd' => (num(lo), num(hi)) match {
+      case "d" => (num(lo), num(hi)) match {
         // double bounds can be ±Infinity — parseDouble reads those;
         // the comparison happens in double space, the same widening
         // Spark applies to the real predicate
         case (Some(l), Some(h)) =>
-          java.lang.Double.parseDouble(mx) >= l.toDouble &&
-            java.lang.Double.parseDouble(mn) <= h.toDouble
+          java.lang.Double.parseDouble(b.max) >= l.toDouble &&
+            java.lang.Double.parseDouble(b.min) <= h.toDouble
         case _ => true
       }
-      case 's' => (lo, hi) match {
+      case "s" => (lo, hi) match {
         case (l: String, h: String) if asciiSafe(l) && asciiSafe(h) =>
-          mx.compareTo(l) >= 0 && mn.compareTo(h) <= 0
+          b.max.compareTo(l) >= 0 && b.min.compareTo(h) <= 0
         case _ => true
       }
       case _ => true
@@ -1655,10 +1418,8 @@ object Snapshots {
     * is always taken whole (a single commit cannot be split, the
     * maxFilesPerTrigger rule — so one oversized commit is delivered
     * alone, never glued onto a batch that already has rows). Row
-    * counts come from the markers' per-entry `rows` field (r20), so
-    * the walk is O(backlog) small marker reads, ZERO data I/O; a
-    * version whose added entries predate the field (unknown count) is
-    * treated as oversized. */
+    * counts come from the markers' per-entry `rows` (r20), so the walk
+    * is O(backlog) small marker reads, ZERO data I/O. */
   def versionCapByRows(s: SparkSession, root: String, from: Long,
                        to: Long, maxRows: Long): Long = {
     require(maxRows >= 1L, s"maxRows must be >= 1, got $maxRows")
@@ -1668,24 +1429,16 @@ object Snapshots {
     var fits = true
     while (v < to && fits) {
       val nv = v + 1
-      val meta = metaOf(s, root, nv) // one read: entries AND counts
-      val es = entriesOfMeta(meta)
-      val counts = rowsOfMeta(meta)
-      val added = es.filterNot(prev).map(e => counts.getOrElse(e, -1L))
-      // unknown count (a pre-r20 marker) → treat as cap-exceeding so
-      // it is delivered alone rather than hiding unbounded volume
-      val n = if (added.exists(_ < 0L)) maxRows else added.sum
+      val es = metaOf(s, root, nv).entries
+      val n = es.filterNot(e => prev(e.dir)).map(_.rows).sum
       // look-ahead admission (review finding): a commit joins the
       // batch only if the batch STAYS under the cap with it — except
       // the first, which is always taken whole (a commit cannot be
       // split). This way a 2-row commit followed by a huge one yields
-      // two batches instead of one cap-busting batch. Compared as
-      // `n <= maxRows - rows` (never rows + n): with the unknown-count
-      // sentinel n = maxRows and maxRows = Long.MaxValue, the sum
-      // overflows negative and would admit everything (review finding)
+      // two batches instead of one cap-busting batch.
       if (v == from || n <= maxRows - rows) {
         rows += n
-        prev = es.toSet
+        prev = es.map(_.dir).toSet
         v = nv
         fits = rows < maxRows
       } else fits = false
@@ -1723,8 +1476,8 @@ object Snapshots {
       val parent = latest(s, root).getOrElse(0L)
       if (batchId <= lastBatchUpTo(s, root, parent)) return false
       try {
-        validateCommit(s, root, parent, Map.empty)
-        appendWith(s, root, df, parent, Map.empty, batch = Some(batchId),
+        validateCommit(s, root, parent)
+        appendWith(s, root, df, parent, batch = Some(batchId),
           partCol = partCol)
         return true
       } catch { case _: SnapshotConflictException => () }
@@ -1744,23 +1497,19 @@ object Snapshots {
     * OCC commit (a concurrent writer conflicts and retries). Throws
     * if `v`'s marker has already been expired. */
   def restore(s: SparkSession, root: String, v: Long): Long = {
-    validateCommit(s, root, 0L, Map.empty)
-    val meta = metaOf(s, root, v) // one read: entries AND counts; throws if expired
+    validateCommit(s, root, 0L)
+    val restored = metaOf(s, root, v).entries // throws if expired
     val parent = latest(s, root).getOrElse(
       throw new NoSuchElementException(s"no committed snapshot under $root"))
-    // carry v's recorded row counts, column ranges, AND column names —
-    // the parent may not reference these entries, and a metadata-only
-    // commit must stay zero-I/O
-    claim(s, root, parent, entriesOfMeta(meta), Seq.empty, Map.empty,
-      knownRows = rowsOfMeta(meta), knownStats = statsOfMeta(meta),
-      knownCols = colsOfMeta(meta))
+    // v's entries carry their recorded row counts, column ranges AND
+    // column names — a metadata-only commit stays zero-I/O
+    claim(s, root, parent, parentMarker(s, root, parent), restored, Seq.empty)
   }
 
   /** The commit log as a DataFrame — DESCRIBE HISTORY: one row per
     * live version with its parent, entry count, TOTAL ROW COUNT (from
-    * the markers' per-entry counts — null when any entry predates the
-    * `rows` field), folded ledger, and the batch id it carried (null
-    * for non-batch commits). Driver cost is O(#versions) small marker
+    * the markers' per-entry counts), folded ledger, and the batch id it
+    * carried (null for non-batch commits). Driver cost is O(#versions) small marker
     * reads, zero data I/O. */
   def history(s: SparkSession, root: String): DataFrame = {
     import s.implicits._
@@ -1774,17 +1523,9 @@ object Snapshots {
       if (Fs.len(s, s"${commitsDir(root)}/$v") == 0L)
         (v, 0, Option.empty[Long], -1L, -1L, Option.empty[Long])
       else {
-      val meta = metaOf(s, root, v)
-      val entryCounts = rowsOfMeta(meta).values.toSeq
-      val numEntries = metaField(meta, "data").map(_.split(" ").length).getOrElse(0)
-      (v,
-        numEntries,
-        if (entryCounts.size == numEntries && entryCounts.forall(_ >= 0L))
-          Some(entryCounts.sum)
-        else None,
-        parentOf(meta),
-        ownLedger(meta, "lb").getOrElse(-1L),
-        ownLedger(meta, "batch"))
+        val m = metaOf(s, root, v)
+        (v, m.entries.size, Some(m.entries.map(_.rows).sum), m.parent, m.lb,
+          Some(m.batch).filter(_ >= 0L))
       }
     }.toDF("version", "num_entries", "num_rows", "parent", "last_batch", "batch")
   }

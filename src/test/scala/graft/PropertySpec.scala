@@ -1,6 +1,8 @@
 package graft
 
 import graft.functions.{TokenJaccardUtil, VectorKernelUtil}
+import graft.sources.MarkerCodec
+import graft.sources.MarkerCodec.{Bound, Entry, Marker}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
@@ -75,6 +77,56 @@ class PropertySpec extends AnyFunSuite {
       assert(math.abs(VectorKernelUtil.dot(aa, bb)) <=
         math.sqrt(VectorKernelUtil.dot(aa, aa)) * math.sqrt(VectorKernelUtil.dot(bb, bb)) + 1e-9)
     }
+  }
+
+  // marker text: unicode (BMP and surrogate pairs) mixed with the
+  // delimiters the pre-codec string format had to escape
+  private val markerText: Gen[String] = Gen.choose(0, 12).flatMap(n => Gen.listOfN(n,
+    Gen.frequency(
+      4 -> Gen.alphaNumChar.map(_.toString),
+      3 -> Gen.oneOf("%", ",", ":", "=", "\"", " ", "\\", "/", "{", "}", "-", "?"),
+      2 -> Gen.choose('\u00a1', '\u2fff').map(_.toString),
+      1 -> Gen.oneOf("\ud83d\ude00", "\ud834\udd1e"))).map(_.mkString))
+  private val longText = Gen.frequency(
+    3 -> Gen.oneOf(Long.MinValue, Long.MaxValue, 0L, -1L),
+    5 -> Gen.choose(Long.MinValue, Long.MaxValue)).map(_.toString)
+  private val doubleText = Gen.frequency(
+    3 -> Gen.oneOf(Double.NegativeInfinity, Double.PositiveInfinity, -0.0,
+      Double.MinValue, Double.MaxValue, Double.MinPositiveValue),
+    5 -> Gen.choose(-1e300, 1e300)).map(_.toString)
+  private val bound: Gen[Bound] = Gen.oneOf(
+    Gen.zip(longText, longText).map { case (a, b) => Bound("l", a, b) },
+    Gen.zip(doubleText, doubleText).map { case (a, b) => Bound("d", a, b) },
+    Gen.zip(markerText, markerText).map { case (a, b) => Bound("s", a, b) })
+  private val entry: Gen[Entry] = for {
+    dir <- markerText
+    rows <- Gen.choose(0L, Long.MaxValue)
+    stats <- Gen.choose(0, 5).flatMap(Gen.mapOfN(_, Gen.zip(markerText, bound)))
+    cols <- Gen.choose(0, 6).flatMap(Gen.listOfN(_, markerText))
+  } yield Entry(dir, rows, stats, cols)
+  private val marker: Gen[Marker] = for {
+    parent <- Gen.choose(0L, Long.MaxValue)
+    lb <- Gen.choose(-1L, Long.MaxValue)
+    batch <- Gen.choose(-1L, Long.MaxValue)
+    entries <- Gen.choose(0, 6).flatMap(Gen.listOfN(_, entry))
+  } yield Marker(MarkerCodec.FormatVersion, parent, lb, batch, entries)
+
+  test("marker codec: decode(encode(m)) == m for arbitrary markers") {
+    samples(marker).foreach { m =>
+      assert(MarkerCodec.decode(MarkerCodec.encode(m)) === m, s"round trip of $m")
+    }
+  }
+
+  test("marker codec refuses a NaN bound on encode and on decode") {
+    val ok = Marker(MarkerCodec.FormatVersion, 0L, -1L, -1L,
+      Seq(Entry("d", 1L, Map("x" -> Bound("d", "1.5", "2.5")), Seq("x"))))
+    val nan = ok.copy(entries = Seq(ok.entries.head.copy(
+      stats = Map("x" -> Bound("d", "NaN", "2.5")))))
+    intercept[IllegalArgumentException] { MarkerCodec.encode(nan) }
+    val okTxt = new String(MarkerCodec.encode(ok), "UTF-8")
+    val nanTxt = okTxt.replace("\"1.5\"", "\"NaN\"")
+    assert(nanTxt !== okTxt, s"the bound rewrite must hit: $okTxt")
+    intercept[IllegalArgumentException] { MarkerCodec.decode(nanTxt.getBytes("UTF-8")) }
   }
 
   test("byte-range line reader: any split reassembles the exact line sequence") {

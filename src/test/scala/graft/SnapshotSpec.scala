@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.Snapshots
+import graft.sources.{MarkerCodec, Snapshots}
 
 /** Commit-log protocol of the snapshot-isolated versioned table
   * (sources/Snapshots.scala): atomic publish, reader isolation,
@@ -15,32 +15,30 @@ class SnapshotSpec extends SparkSpec {
   private def freshRoot(): String =
     Files.createTempDirectory("graft_snap_").toString + "/tbl"
 
-  /** The marker's manifest entries, parsed the way the format writes
-    * them — ONE test-side parser for every entry-level assert. */
-  private def manifestEntries(root: String, v: Long): Seq[String] = {
-    val txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$root/_commits/$v")), "UTF-8")
-    txt.split("\"data\":\"")(1).split("\"")(0).split(" ").toSeq
-  }
+  /** Version `v`'s commit marker, decoded by the codec the engine
+    * writes it with — every marker-level assert goes through it. */
+  private def marker(root: String, v: Long): MarkerCodec.Marker =
+    MarkerCodec.decode(Files.readAllBytes(
+      java.nio.file.Paths.get(s"$root/_commits/$v")))
+
+  private def manifestEntries(root: String, v: Long): Seq[String] =
+    marker(root, v).entries.map(_.dir)
 
   test("distributed footer harvest writes byte-identical markers (r21 opt)") {
     // The commit-time stats harvest runs executor-side past a file-
     // count threshold (VERDICT r20 wrong #2: the serial driver loop
     // pays thousands of serial footer reads on a big compaction).
-    // Forcing both paths over the SAME staged data must produce
-    // byte-identical rows/stats/cols marker fields — the distributed
-    // sweep is a pure relocation of the per-file footer reads.
+    // Forcing both paths over the SAME staged data must record
+    // identical rows/stats/cols for every marker entry — the
+    // distributed sweep is a pure relocation of the per-file footer
+    // reads.
     val s = spark
     import s.implicits._
     val df = (1 to 1000).map(i => (i.toLong, i % 7, s"v$i", i * 1.5))
       .toDF("k", "p", "v", "x")
       .repartition(24) // enough files to cross the default threshold
-    def markerFields(root: String): (String, String, String) = {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$root/_commits/1")), "UTF-8")
-      def f(name: String) = txt.split("\"" + name + "\":\"")(1).split("\"")(0)
-      (f("rows"), f("stats"), f("cols"))
-    }
+    def markerFields(root: String) =
+      marker(root, 1L).entries.map(e => (e.rows, e.stats, e.cols))
     val seqRoot = freshRoot()
     val distRoot = freshRoot()
     val key = "spark.graft.statsHarvestDistributeMinFiles"
@@ -50,7 +48,10 @@ class SnapshotSpec extends SparkSpec {
       spark.conf.set(key, "1") // executor-side sweep
       Snapshots.commit(spark, distRoot, df, 0L)
     } finally spark.conf.unset(key)
-    assert(markerFields(seqRoot) === markerFields(distRoot),
+    val seqFields = markerFields(seqRoot)
+    assert(seqFields.nonEmpty && seqFields.forall(_._2.nonEmpty),
+      s"the harvest must record stats to compare: $seqFields")
+    assert(seqFields === markerFields(distRoot),
       "distributed and sequential footer harvests must record identical " +
         "rows/stats/cols")
   }
@@ -61,17 +62,13 @@ class SnapshotSpec extends SparkSpec {
     import s.implicits._
     Snapshots.commit(spark, root, Seq((1L, "a")).toDF("k", "v"), 0L)
     // the widened-empty-append schema-evolution vehicle: 0 rows, but
-    // the footer schema carries the new column w — the marker's cols
-    // token must record (k, v, w), not '-' (provably column-free)
+    // the footer schema carries the new column w — the marker's entry
+    // must record cols (k, v, w), not none (provably column-free)
     Snapshots.appendCommit(spark, root,
       Seq.empty[(Long, String, Option[Long])].toDF("k", "v", "w"), 1L)
-    val txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$root/_commits/2")), "UTF-8")
-    val colsField = txt.split("\"cols\":\"")(1).split("\"")(0)
-    assert(colsField.split(" ").exists { tok =>
-      val cs = tok.split(",").toSet
-      cs.contains("w") && cs.contains("k") && cs.contains("v")
-    }, s"the 0-row entry must record its footer schema's columns: $colsField")
+    val cols = marker(root, 2L).entries.map(_.cols)
+    assert(cols.exists(cs => Set("k", "v", "w").subsetOf(cs.toSet)),
+      s"the 0-row entry must record its footer schema's columns: $cols")
   }
 
   test("history survives a dead zero-length claim with a placeholder row (ADVICE r20 #3)") {
@@ -473,12 +470,10 @@ class SnapshotSpec extends SparkSpec {
     java.nio.file.Files.write(marker, Array.empty[Byte])
     // a racing writer completes the content shortly after the reader
     // starts resolving — the reader must wait it out, not crash
-    val dataDirs = new java.io.File(s"$root/data").listFiles()
-      .filter(_.isDirectory).map(_.getName)
+    val late = MarkerCodec.encode(this.marker(root, 1L).copy(parent = 1L))
     val filler = new Thread(() => {
       Thread.sleep(300)
-      java.nio.file.Files.write(marker,
-        s"""{"data":"${dataDirs.head}","parent":1,"lb":"-1"}""".getBytes("UTF-8"))
+      java.nio.file.Files.write(marker, late)
     })
     filler.start()
     assert(Snapshots.read(spark, root).as[(Long, String)].collect().toSeq
@@ -491,6 +486,45 @@ class SnapshotSpec extends SparkSpec {
     val e = intercept[IllegalStateException] { Snapshots.read(spark, root) }
     assert(e.getMessage.contains("_commits/3"))
     java.nio.file.Files.delete(java.nio.file.Paths.get(s"$root/_commits/3"))
+  }
+
+  test("a complete marker of another format fails fast with a named error; empty or truncated ones stay in flight") {
+    val root = freshRoot()
+    val s = spark
+    import s.implicits._
+    Snapshots.commit(spark, root, Seq((1L, "a")).toDF("k", "v"), 0L)
+    val m1 = marker(root, 1L)
+    val p2 = java.nio.file.Paths.get(s"$root/_commits/2")
+    val good = MarkerCodec.encode(m1.copy(parent = 1L))
+    val goodTxt = new String(good, "UTF-8")
+    val preCodec = s"""{"data":"${m1.entries.head.dir}","rows":"1",""" +
+      """"stats":"k=l:1:1","cols":"k,v","parent":"1","lb":"-1"}"""
+    val v2 = new String(MarkerCodec.encode(m1.copy(formatVersion = 2, parent = 1L)), "UTF-8")
+    val noLb = goodTxt.replace(""""lb":-1,""", "")
+    assert(noLb !== goodTxt, s"the field strip must hit: $goodTxt")
+    val foreign = Seq(preCodec -> "formatVersion absent", v2 -> "formatVersion 2",
+      noLb -> "'lb'", "not a marker" -> "Unrecognized token")
+    foreign.foreach { case (content, found) =>
+      Files.write(p2, content.getBytes("UTF-8"))
+      val t0 = System.nanoTime()
+      val e = intercept[IllegalStateException] { Snapshots.read(spark, root) }
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(e.getMessage.contains(s"version 2 of $root") &&
+        e.getMessage.contains(found),
+        s"the error must name root, version and $found: ${e.getMessage}")
+      // the in-flight retry would take 50 × 40 ms before giving up
+      assert(ms < 1500, s"a complete foreign marker must fail at once, took $ms ms")
+    }
+    // an empty or truncated marker is a claim whose content is still
+    // being written: the reader waits it out
+    Seq(Array.empty[Byte], good.take(good.length / 2)).foreach { partial =>
+      Files.write(p2, partial)
+      val filler = new Thread(() => { Thread.sleep(300); Files.write(p2, good): Unit })
+      filler.start()
+      assert(Snapshots.read(spark, root).as[(Long, String)].collect().toSeq
+        === Seq((1L, "a")), s"the reader must wait out ${partial.length} bytes")
+      filler.join()
+    }
   }
 
   test("SQL surface: USING graft-snapshot time-travels, pins, and plans a native FileScan (r18 #3)") {
@@ -833,12 +867,6 @@ class SnapshotSpec extends SparkSpec {
     }
     Snapshots.commitPartitioned(spark, root,
       Seq((1L, 1, "a"), (2L, 2, "b"), (3L, 3, "c")).toDF("k", "p", "v"), "p", 0L)
-    // "batch" is the exactly-once ledger's field: caller meta must not
-    // be able to poison replay detection
-    intercept[IllegalArgumentException] {
-      Snapshots.commit(spark, root, Seq((9L, 9, "z")).toDF("k", "p", "v"), 1L,
-        extraMeta = Map("batch" -> "20260815"))
-    }
     // a DELETE that empties partition 2 rides in alsoDrop — the same
     // atomic commit replaces 1 and removes 2 entirely
     val v2 = Snapshots.commitReplace(spark, root,
@@ -848,13 +876,16 @@ class SnapshotSpec extends SparkSpec {
       === Seq((1L, 1, "A!"), (3L, 3, "c")),
       "alsoDrop must remove the emptied partition in the same commit")
     // escaped partition values: 'a:b' stages as __gp=a%3Ab — the drop
-    // must match the RAW value the caller knows
+    // must match the RAW value the caller knows; a space survives path
+    // escaping and is an ordinary manifest entry
     val root2 = freshRoot()
     Snapshots.commitPartitioned(spark, root2,
-      Seq((1L, "a:b", 10L), (2L, "plain", 20L)).toDF("k", "p", "n"), "p", 0L)
+      Seq((1L, "a:b", 10L), (2L, "plain", 20L), (3L, "a b", 30L))
+        .toDF("k", "p", "n"), "p", 0L)
     val v2b = Snapshots.commitDropPartitions(spark, root2, Seq("a:b"), 1L)
-    assert(Snapshots.readAsOf(spark, root2, v2b).as[(Long, String, Long)]
-      .collect().toSeq === Seq((2L, "plain", 20L)),
+    assert(Snapshots.readAsOf(spark, root2, v2b).orderBy("k")
+      .as[(Long, String, Long)].collect().toSeq
+      === Seq((2L, "plain", 20L), (3L, "a b", 30L)),
       "an escaped partition value must be droppable by its raw form")
     // a stream whose checkpointed offset was expired gets the NAMED
     // retention error, not a bare missing-version crash
@@ -1113,17 +1144,9 @@ class SnapshotSpec extends SparkSpec {
     // zero I/O
     Snapshots.commitDropPartitions(spark, root, Seq("3"), 2L)
     assert(numRows().last === ((3L, Some(4L))))
-    // a LEGACY marker (no rows field) must surface null, not a lie —
-    // and commits on top of it record unknown for inherited entries
-    val m3 = java.nio.file.Paths.get(s"$root/_commits/3")
-    val stripped = new String(java.nio.file.Files.readAllBytes(m3), "UTF-8")
-      .replaceFirst(""""rows":"[^"]*",""", "")
-    java.nio.file.Files.write(m3, stripped.getBytes("UTF-8"))
-    assert(numRows().last === ((3L, None)))
     Snapshots.commitReplace(spark, root,
       Seq((1L, 1, "A"), (7L, 1, "e")).toDF("k", "p", "v"), "p", 3L)
-    assert(numRows().last === ((4L, None)),
-      "inheriting from a legacy marker must stay honest (unknown)")
+    assert(numRows().last === ((4L, Some(5L))))
     // a full partitioned rewrite re-counts everything and recovers
     Snapshots.compactPartitioned(spark, root, "p")
     assert(numRows().last === ((5L, Some(5L))))
@@ -1301,29 +1324,6 @@ class SnapshotSpec extends SparkSpec {
       "the contradictory commit must leave the log untouched")
   }
 
-  test("history reads both r20 (quoted parent) and legacy (bare parent) markers with one parser") {
-    val root = freshRoot()
-    val s = spark
-    import s.implicits._
-    Snapshots.commit(spark, root, Seq((1L, "a")).toDF("k", "v"), 0L)
-    Snapshots.appendCommit(spark, root, Seq((2L, "b")).toDF("k", "v"), 1L)
-    // rewrite marker 1 into the PRE-r20 format: parent as a bare
-    // number, the one field metaField could not read
-    val m1 = java.nio.file.Paths.get(s"$root/_commits/1")
-    val legacy = new String(java.nio.file.Files.readAllBytes(m1), "UTF-8")
-      .replace(""""parent":"0"""", """"parent":0""")
-    assert(legacy.contains(""""parent":0"""), s"rewrite must hit: $legacy")
-    java.nio.file.Files.write(m1, legacy.getBytes("UTF-8"))
-    val h = Snapshots.history(spark, root)
-      .select(col("version"), col("parent"))
-      .as[(Long, Long)].collect().toSeq.sortBy(_._1)
-    assert(h === Seq((1L, 0L), (2L, 1L)),
-      s"legacy and current markers must parse identically: $h")
-    // and reads over the mixed-format log stay intact
-    assert(Snapshots.read(spark, root).orderBy("k").as[(Long, String)]
-      .collect().toSeq === Seq((1L, "a"), (2L, "b")))
-  }
-
   test("txnAppend: an empty FIRST micro-batch is a replay-safe no-op, not a crash loop (r20 review)") {
     val s = spark
     import s.implicits._
@@ -1437,14 +1437,11 @@ class SnapshotSpec extends SparkSpec {
     }
     Snapshots.commitPartitioned(spark, root,
       base.toDF("k", "p", "v", "d"), "p", 0L)
-    def statsField(v: Long): Seq[String] = {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$root/_commits/$v")), "UTF-8")
-      txt.split("\"stats\":\"")(1).split("\"")(0).split(" ").toSeq
-    }
+    def statsField(v: Long): Seq[Map[String, MarkerCodec.Bound]] =
+      marker(root, v).entries.map(_.stats)
     val toks = statsField(1L)
-    assert(toks.size === 3 && toks.forall(t => t.contains("k=l:") &&
-      t.contains("v=s:") && t.contains("d=d:")),
+    assert(toks.size === 3 && toks.forall(t => t.get("k").exists(_.kind == "l") &&
+      t.get("v").exists(_.kind == "s") && t.get("d").exists(_.kind == "d")),
       s"each entry must record long, string, and double ranges: $toks")
     // long-kind pruning: [12,15] lives only in the p=2 entry
     val byK = Snapshots.readRange(spark, root, "k", 12L, 15L)
@@ -1472,7 +1469,8 @@ class SnapshotSpec extends SparkSpec {
       cur.filter(col("p") === 2).withColumn("k", col("k") + 100L)
     }: Unit
     val toks2 = statsField(2L)
-    assert(toks2.size === 3 && toks2.exists(_.contains("k=l:111:120")),
+    assert(toks2.size === 3 &&
+      toks2.exists(_.get("k").contains(MarkerCodec.Bound("l", "111", "120"))),
       s"the rewritten partition must record its new k range: $toks2")
     assert(Snapshots.readRange(spark, root, "k", 111L, 120L)
       .count() === 10L)
@@ -1485,17 +1483,6 @@ class SnapshotSpec extends SparkSpec {
     Snapshots.restore(spark, root, 1L)
     assert(statsField(3L).toSet === statsField(1L).toSet,
       "restore must inherit the source version's recorded ranges")
-    // a legacy marker without the stats field reads everything —
-    // pruning degrades to a plain filtered read, never a wrong answer
-    val m3 = java.nio.file.Paths.get(s"$root/_commits/3")
-    val legacy = new String(java.nio.file.Files.readAllBytes(m3), "UTF-8")
-      .replaceFirst(""""stats":"[^"]*",""", "")
-    java.nio.file.Files.write(m3, legacy.getBytes("UTF-8"))
-    val noStats = Snapshots.readRange(spark, root, "k", 12L, 15L)
-    assert(noStats.select("k").as[Long].collect().sorted.toSeq
-      === Seq(12L, 13L, 14L, 15L))
-    assert(noStats.inputFiles.exists(!_.contains(s"/data/$gp2/")),
-      "without recorded ranges every entry must be planned (conservative)")
   }
 
   test("stats hardening: capped columns drop whole, infinity/float predicates no-prune, asOf strict (r20 review)") {
@@ -1518,15 +1505,12 @@ class SnapshotSpec extends SparkSpec {
       .select(("c1" +: (2 to 16).map(i => s"c$i") :+ "k17").map(col): _*)
       .repartitionByRange(2, col("c1"))
     Snapshots.commit(spark, root, wide, 0L)
-    val tok = {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$root/_commits/1")), "UTF-8")
-      txt.split("\"stats\":\"")(1).split("\"")(0)
-    }
-    assert(!tok.contains("c5="), s"the NaN-poisoned column records nothing: $tok")
-    assert(!tok.contains("k17="),
+    val tok = marker(root, 1L).entries.map(_.stats).reduce(_ ++ _)
+    assert(!tok.contains("c5"), s"the NaN-poisoned column records nothing: $tok")
+    assert(!tok.contains("k17"),
       s"a capped-out column must never record partial bounds: $tok")
-    assert(tok.contains("c1=l:1:100"), s"surviving columns keep true bounds: $tok")
+    assert(tok.get("c1").contains(MarkerCodec.Bound("l", "1", "100")),
+      s"surviving columns keep true bounds: $tok")
     // the unrecorded column reads everything, correctly
     assert(Snapshots.readRange(spark, root, "k17", 50000L, 52000L)
       .select("c1").as[Long].collect().sorted.toSeq === (50L to 52L))
@@ -1580,17 +1564,11 @@ class SnapshotSpec extends SparkSpec {
       partCol = Some("p")))
     assert(manifestEntries(root2, 2L) === manifestEntries(root2, 1L))
     // Long.MaxValue as maxRowsPerTrigger (the 'unlimited' convention)
-    // must not overflow when a marker predates per-entry row counts
-    // (unknown count = oversized sentinel): the unknown commit is
-    // delivered ALONE, never glued onto a batch that already has rows
+    // admits the whole backlog as one batch
     val root3 = freshRoot()
     Snapshots.commit(spark, root3, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), 0L)
     Snapshots.appendCommit(spark, root3, Seq((3L, "c")).toDF("k", "v"), 1L)
     Snapshots.appendCommit(spark, root3, Seq((4L, "d")).toDF("k", "v"), 2L)
-    val m2 = java.nio.file.Paths.get(s"$root3/_commits/2")
-    val legacy = new String(java.nio.file.Files.readAllBytes(m2), "UTF-8")
-      .replaceFirst(""""rows":"[^"]*",""", "")
-    java.nio.file.Files.write(m2, legacy.getBytes("UTF-8"))
     val batches = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
     val q = spark.readStream.format("graft-snapshot")
       .option("path", root3)
@@ -1602,8 +1580,7 @@ class SnapshotSpec extends SparkSpec {
     try q.processAllAvailable() finally q.stop()
     import scala.jdk.CollectionConverters._
     val got = batches.asScala.toSeq.sortBy(_._1).map(_._2)
-    assert(got === Seq(2L, 1L, 1L),
-      s"the unknown-count commit must close its batch and ride alone: $got")
+    assert(got === Seq(4L), s"an unlimited cap must deliver one batch: $got")
   }
 
   test("readRange keeps the full snapshot schema when pruning crosses an evolution boundary (r20 review)") {
@@ -1636,97 +1613,20 @@ class SnapshotSpec extends SparkSpec {
     assert(wOut.columns.toSeq === Seq("k", "p", "v", "w") &&
       wOut.count() === 0L,
       "a range on a column living only in pruned entries is empty, not an error")
-    // markers record per-entry COLUMN NAMES (zero-I/O boundary test):
-    // assert against the cols FIELD's value, not the whole marker
-    // (every marker contains the letter w via "rows" — review finding)
-    val m2txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$root/_commits/2")), "UTF-8")
-    val colsField = m2txt.split("\"cols\":\"")(1).split("\"")(0)
-    assert(colsField.split(" ").exists(_.split(",").contains("w")),
-      s"the appended entry's cols token must name w: $colsField")
-    assert(colsField.split(" ").forall(_.split(",").contains("k")),
-      s"every entry's cols token must name k: $colsField")
-    // a LEGACY marker without the cols field degrades to the sampled
-    // probe — same answers, just not zero-I/O
-    val m2 = java.nio.file.Paths.get(s"$root/_commits/2")
-    java.nio.file.Files.write(m2,
-      m2txt.replaceFirst(""""cols":"[^"]*",""", "").getBytes("UTF-8"))
-    val lowLegacy = Snapshots.readRange(spark, root, "k", 1L, 5L)
-    assert(lowLegacy.columns.toSeq === Seq("k", "p", "v", "w") &&
-      lowLegacy.count() === 5L)
+    // markers record per-entry COLUMN NAMES (zero-I/O boundary test)
+    val cols = marker(root, 2L).entries.map(_.cols)
+    assert(cols.exists(_.contains("w")),
+      s"the appended entry's cols must name w: $cols")
+    assert(cols.forall(_.contains("k")), s"every entry's cols must name k: $cols")
   }
 
-  test("an entry inherited from a pre-cols marker forces the schema probe (r20 review)") {
-    val root = freshRoot()
-    val s = spark
-    import s.implicits._
-    // seed carries w; simulate a PRE-cols writer by stripping the
-    // field from its marker — the table's history now spans the
-    // cols-field introduction
-    Snapshots.commitPartitioned(spark, root,
-      (1 to 10).map(i => (i.toLong, 1, s"v$i", i * 10L))
-        .toDF("k", "p", "v", "w"), "p", 0L)
-    val m1 = java.nio.file.Paths.get(s"$root/_commits/1")
-    val noCols = new String(java.nio.file.Files.readAllBytes(m1), "UTF-8")
-      .replaceFirst(""""cols":"[^"]*",""", "")
-    java.nio.file.Files.write(m1, noCols.getBytes("UTF-8"))
-    // the NEW writer appends a narrower entry: its marker records the
-    // staged entry's cols but must mark the inherited one UNKNOWN
-    Snapshots.appendPartitioned(spark, root,
-      (11 to 20).map(i => (i.toLong, 2, s"v$i")).toDF("k", "p", "v"), "p", 1L)
-    val m2txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$root/_commits/2")), "UTF-8")
-    assert(m2txt.split("\"cols\":\"")(1).split("\"")(0).split(" ")
-      .contains("?"),
-      "an entry inherited from a pre-cols parent must record '?', not a " +
-        s"claim of column-freeness: $m2txt")
-    // pruning away the (unknown-schema) w-bearing entry must still
-    // surface w null-typed — '?' forces the sampled probe
-    val hi = Snapshots.readRange(spark, root, "k", 11L, 15L)
-    assert(hi.columns.toSeq === Seq("k", "p", "v", "w") && hi.count() === 5L,
-      s"unknown-schema entries must force alignment: ${hi.columns.toSeq}")
-    assert(hi.filter(col("w").isNotNull).count() === 0L)
-  }
-
-  test("legacy caller extraMeta named batch cannot poison the ledger walk (r20 review)") {
-    val root = freshRoot()
-    val s = spark
-    import s.implicits._
-    Snapshots.commit(spark, root, Seq((1L, "a")).toDF("k", "v"), 0L)
-    // simulate a pre-reservation marker: no own lb, caller extras
-    // carrying a "batch" key among them — the fallback walk must not
-    // promote it into the exactly-once ledger
-    val m1 = java.nio.file.Paths.get(s"$root/_commits/1")
-    val legacy = new String(java.nio.file.Files.readAllBytes(m1), "UTF-8")
-      .replaceFirst(""","lb":"-1"""", ""","note":"x","batch":"999"""")
-    java.nio.file.Files.write(m1, legacy.getBytes("UTF-8"))
-    assert(Snapshots.txnAppend(spark, root, Seq((2L, "b")).toDF("k", "v"), 5L),
-      "a real batch id below the bogus extras value must still commit")
-    assert(Snapshots.read(spark, root).orderBy("k").as[(Long, String)]
-      .collect().toSeq === Seq((1L, "a"), (2L, "b")))
-    // and a replay of the REAL batch id still skips
-    assert(!Snapshots.txnAppend(spark, root, Seq((9L, "x")).toDF("k", "v"), 5L))
-  }
-
-  test("guards: keepLast>=1, JSON-safe extraMeta, no commits ahead of latest") {
+  test("guards: keepLast>=1, no commits ahead of latest") {
     val root = freshRoot()
     val s = spark
     import s.implicits._
     Snapshots.commit(spark, root, Seq((1L, "a")).toDF("k", "v"), 0L)
     intercept[IllegalArgumentException] {
       Snapshots.expire(spark, root, keepLast = 0)
-    }
-    intercept[IllegalArgumentException] { // quote would corrupt the marker
-      Snapshots.commit(spark, root, Seq((2L, "b")).toDF("k", "v"), 1L,
-        extraMeta = Map("note" -> "say \"hi\""))
-    }
-    intercept[IllegalArgumentException] { // manifest fields are reserved
-      Snapshots.commit(spark, root, Seq((2L, "b")).toDF("k", "v"), 1L,
-        extraMeta = Map("data" -> "evil"))
-    }
-    intercept[IllegalArgumentException] { // the folded ledger is reserved too
-      Snapshots.commit(spark, root, Seq((2L, "b")).toDF("k", "v"), 1L,
-        extraMeta = Map("lb" -> "99"))
     }
     intercept[IllegalArgumentException] { // parent ahead of latest = gap
       Snapshots.commit(spark, root, Seq((2L, "b")).toDF("k", "v"), 5L)
